@@ -50,8 +50,9 @@ object SparkEntry {
     sparkGen.sqls.keys.map { name =>
       name -> ((s: SparkSession, dir: String) => {
         Tables.register(s, dir)
-        if (WmCache.dependents(name)) WmCache.ensure(s, dir)
-        s.sql(sparkGenFor(s, dir).sql(name))
+        val sql = sparkGenFor(s, dir).sql(name)
+        if (WmCache.readBy(sql)) WmCache.ensure(s, dir)
+        s.sql(sql)
       })
     }.toMap ++ programmatic
 
@@ -1038,7 +1039,7 @@ object SparkEntry {
   }
 
   // every doc-side session table goes through the cross-session
-  // parquet scratch (graft.Scratch — the WmCache pattern): a fresh
+  // artifact store (graft.Scratch, which holds the chain too): a fresh
   // session READS the kept artifact instead of re-paying the
   // corpus-priced build; scratch off / write failure falls back to
   // the in-session localCheckpoint, value-identical

@@ -17,8 +17,8 @@ import java.nio.file.{Files, Paths}
   *    prefix is maximal;
   *  - dumps run on a small thread pool (Spark job submission is
   *    thread-safe; shared chain/scratch stages are built once on the
-  *    main thread first, and Scratch.table memoizes via
-  *    computeIfAbsent) — wall time ≈ single-threaded / pool size;
+  *    main thread first, and the Scratch store memoizes each
+  *    artifact per session) — wall time ≈ single-threaded / pool size;
   *  - INCREMENTAL re-runs: each key gets a signature file under the
   *    SIBLING metadata dir `<outDir>_sigs/<key>` (outside the dump
   *    dir entirely — r13: the driver's comparator globs outDir's
@@ -74,12 +74,6 @@ object Verify {
     graft.functions.Prf.md5hex(s).take(16)
   }
 
-  private def dataFingerprint(dir: String): String =
-    Tables.names.map { n =>
-      val f = new File(s"$dir/$n.parquet")
-      s"$n:${f.length}:${f.lastModified}"
-    }.mkString(",")
-
   def main(args: Array[String]): Unit = {
     val deadlineAt = System.nanoTime() +
       (sys.env.getOrElse("SPARK_GRAFT_VERIFY_BUDGET", "1500").toDouble * 1e9).toLong
@@ -89,6 +83,9 @@ object Verify {
     val incr = sys.env.getOrElse("SPARK_GRAFT_VERIFY_INCR", "on") != "off"
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
     new File(outDir).mkdirs()
+    // signatures used to live in `outDir/_sigs`; on a reused dump dir
+    // that legacy dir would keep grading as a parquet-read error row
+    Scratch.deleteRec(new File(outDir, "_sigs"))
 
     // ---- oracle JSON first: no Spark work needed, and it is what the
     // driver's compare reads — with it on disk, any prefix of dumps
@@ -149,7 +146,7 @@ object Verify {
       else GateCosts.cheapestFirst(
         onlyKeys.fold(SparkEntry.queries.keys)(ks =>
           SparkEntry.queries.keys.filter(ks)), GateCosts.load())
-    val sigBase = if (incr) codeFingerprint + "|" + dataFingerprint(sfDir) else ""
+    val sigBase = if (incr) codeFingerprint + "|" + Scratch.dataFingerprint(sfDir) else ""
     def sigOf(name: String): String = graft.functions.Prf.md5hex(
       sigBase + "|" + SparkEntry.oracleSql.getOrElse(name, "")).take(16)
 

@@ -1,164 +1,66 @@
 package graft
 
-import java.io.File
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sqlgen.{Gen, SparkDialect}
+import org.apache.spark.sql.SparkSession
+import graft.sqlgen.{Gen, SparkDialect, Wm}
 
-/** Shared materialization of the watermark chain (bkt → knn → indeg →
-  * carriers → stego) per (session, sf dir).
+/** The watermark chain (bkt → knn → indeg → carriers → stego) and the
+  * ANN index builds that ride with it (IVF, PQ, BQ): the `cacheStages`
+  * artifacts, built and read through the [[Scratch]] store per
+  * (session, sf dir) and registered as g_* temp views.
   *
-  * ~11 queries (wm_*, BER suite, writeback, recall, LSH dedup/top-k)
-  * consume some prefix of the same chain; without sharing, each one
-  * rebuilds it from scratch (the reference computes it once per embed
-  * call too — database/pgvector/pg_func.py:735 embed_watermark). Each
-  * stage is materialized eagerly and registered as a g_* temp view;
-  * the Spark-dialect query rendering (Gen with useViews) aliases the
-  * views while the DuckDB oracle keeps the full inline chain — the
-  * views hold exactly the full chain's rows, so results are identical.
-  *
-  * TWO materialization layers:
-  *
-  *  - CROSS-SESSION parquet scratch (default on, `spark.graft.scratch`
-  *    conf / SPARK_GRAFT_SCRATCH env; "off" disables): each stage is
-  *    written once under a key derived from the sf dir, the DATA
-  *    fingerprint (embeddings.parquet size+mtime), and the md5 of the
-  *    generated stage SQL itself — so a testdata refresh or any edit
-  *    to the chain SQL auto-invalidates, never serving stale rows. A
-  *    later session (e.g. the bench after verify) registers plain
-  *    parquet scans — chain build cost ≈ read cost. Writes go to a
-  *    process-unique tmp dir renamed into place, so concurrent
-  *    builders race safely. This is the 100 TB scratch-table story
-  *    made executable: the cached stages are the SMALL derived
-  *    artifacts (O(N) ids/edges and rate·N·d stego cells), never the
-  *    raw exploded vectors.
-  *
-  *  - in-session localCheckpoint fallback (scratch off or write
-  *    failure). localCheckpoint (not persist) on purpose: it SEVERS
-  *    the logical lineage, so each registered view is a plain
-  *    LogicalRDD — a lazily persisted view would carry its full
-  *    WithCTE plan into every consumer; nesting those inside the
-  *    consumers' own CTEs trips Catalyst's
-  *    PushdownPredicatesAndPruneColumnsForCTEDef on CTE-id bookkeeping
-  *    (observed: "key not found" crashes and, worse, a mis-resolved
-  *    CTE ref that silently built stego rows from the wrong carrier
-  *    set). Parquet-backed views are equally lineage-free, which is
-  *    why the scratch layer needs no checkpoint.
+  * Many queries (wm_*, BER suite, writeback, recall, LSH/IVF/PQ top-k,
+  * graph analytics) consume some prefix of the same chain; without
+  * sharing, each one rebuilds it (the reference computes it once per
+  * embed call too — database/pgvector/pg_func.py:735 embed_watermark).
+  * The Spark-dialect rendering (Gen with useViews) aliases the views
+  * while the DuckDB oracle keeps the full inline chain — the views hold
+  * exactly the full chain's rows, so results are identical.
   */
 object WmCache {
 
-  /** Query keys whose Spark rendering reads the g_* views. */
-  val dependents: Set[String] = Set(
-    "dedup_embedding", "vec_topk_lsh", "wm_knn_edges", "knn_edges_salted", "wm_in_degree",
-    "wm_carriers", "wm_embed", "wm_extract", "wm_vote_margin", "wm_ber", "wm_ber_curve", "wm_ber_subset",
-    "wm_ber_truncate", "wm_ber_combo", "wm_ber_quantize", "wm_ber_permute", "wm_recall_impact",
-    "vec_writeback", "wm_drift", "wm_backup", "wm_restore",
-    "vec_range_search", "graph_pagerank", "graph_triangles", "graph_link_predict", "lsh_bucket_stats",
-    "vec_topk_sq_lsh", "vec_topk_filtered_lsh",
-    "vec_hard_negatives", "ann_recall_eval",
-    "vec_topk_ivf", "vec_topk_pq", "vec_topk_ivf_pq", "vec_topk_ivf_pq_rerank",
-    "dedup_semantic", "vec_ivf_reindex", "vec_ivf_reindex_delete", "vec_cluster_stats",
-    "vec_topk_binary", "vec_topk_binary_rerank",
-    "ann_nprobe_curve", "wm_capacity", "vec_topk_ivf_bq",
-    "vec_topk_graph", "vec_append", "index_catalog", "vec_outliers",
-    "vec_knn_classify", "vec_delete", "graph_communities",
-    "graph_ppr", "graph_walks", "graph_mutual_knn", "wm_steganalysis",
-    "vec_kmeans_step", "graph_kcore", "wm_overwrite", "graph_beam_curve",
-    "vec_pq_distortion", "graph_assortativity", "graph_hops_reach",
-    "graph_clustering_coeff", "ann_multiprobe_curve", "graph_component_sizes", "wm_key_mismatch",
-    "graph_degree_hist", "vec_lid", "graph_powerlaw_fit", "ann_ensemble_recall",
-    "vec_pq_codebook_balance", "index_recall_ladder", "graph_rich_club",
-    "ann_refine_curve", "graph_path_length", "wm_collusion", "graph_hubness",
-    "wm_multi_tenant", "wm_repair", "ann_recall_at_k_curve", "wm_delta_curve", "wm_audit_curve",
-    "dedup_semantic_curve", "graph_lpa_curve", "vec_kmeans_elbow", "graph_eigen_centrality", "wm_rate_curve",
-    "wm_extract_ids", "ann_filter_strategy_curve",
-    "graph_spectral", "graph_percolation_curve", "wm_recover_registry",
-    "vec_topk_graph_filtered", "vec_bq_rotation", "graph_betweenness",
-    "ann_recall_after_delete", "graph_knn_degree_curve")
+  /** The cacheStages view names (the same at every plane count). */
+  private lazy val views: Set[String] =
+    new Gen(SparkDialect).cacheStages.map(_._1).toSet
 
-  private case class Entry(dir: String, dfs: Seq[DataFrame])
-  private val state = new java.util.concurrent.ConcurrentHashMap[SparkSession, Entry]()
+  /** Whether a Spark rendering reads a chain view, i.e. needs [[ensure]]. */
+  def readBy(sql: String): Boolean = Scratch.refs(sql).exists(views)
 
-  /** Scratch root, or None when disabled (shared with the doc-side
-    * Scratch layer so one conf governs both). */
-  private[graft] def scratchRoot(spark: SparkSession): Option[File] = {
-    val conf = try spark.conf.get("spark.graft.scratch") catch {
-      case _: Exception =>
-        sys.env.getOrElse("SPARK_GRAFT_SCRATCH", new File(".graft-scratch").getAbsolutePath)
+  /** Stages split into their independent chains: the connected
+    * components of the stages' g_* references, each in declaration
+    * order: the wm selection chain, the IVF index build (ct → asg),
+    * the PQ index build (ct → codes) and the BQ codes, each starting
+    * from the raw `embeddings` scan. */
+  private[graft] def chains(stages: Seq[(String, String)]): Seq[Seq[(String, String)]] =
+    stages.foldLeft(Vector.empty[Seq[(String, String)]]) { (acc, stage) =>
+      val reads = Scratch.refs(stage._2)
+      val (linked, rest) = acc.partition(_.exists(s => reads(s._1)))
+      rest :+ (linked.flatten :+ stage)
     }
-    conf match {
-      case "" | "off" | "false" => None
-      case p => Some(new File(p))
-    }
-  }
 
-  /** Cache key: sf dir + data fingerprint + chain-SQL fingerprint. */
-  private def cacheKey(dir: String, stages: Seq[(String, String)]): String = {
-    val emb = new File(s"$dir/embeddings.parquet")
-    val raw = Seq(dir, emb.length.toString, emb.lastModified.toString,
-      stages.map { case (vn, sq) => vn + "=" + sq }.mkString(";")).mkString("|")
-    graft.functions.Prf.md5hex(raw).take(16)
-  }
+  private val chainsByPlanes =
+    new java.util.concurrent.ConcurrentHashMap[Int, Seq[Seq[(String, String)]]]()
 
-  /** Idempotently build + register the chain views for (spark, dir). */
-  def ensure(spark: SparkSession, dir: String): Unit = state.synchronized {
-    val cur = state.get(spark)
-    if (cur == null || cur.dir != dir) {
-      if (cur != null) cur.dfs.foreach(_.unpersist(blocking = false))
-      Tables.register(spark, dir)
-      // same N-derived plane count as SparkEntry's consumer renderings:
-      // the g_* views and every query reading them must agree on the
-      // bucket layout (the stage-SQL md5 in the scratch key invalidates
-      // any previously cached layout automatically)
-      val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(spark, dir))
-      val stages = new Gen(SparkDialect, lshPlanes = planes).cacheStages
-      val viaScratch = scratchRoot(spark).exists { root =>
-        try { ensureScratch(spark, dir, root, stages); true }
-        catch { case e: Exception =>
-          System.err.println(s"[wmcache] scratch failed (${e.getMessage}), " +
-            "falling back to localCheckpoint"); false }
-      }
-      val dfs = if (viaScratch) Nil else
-        inChains(stages) { case (view, sql) =>
-          // eager: computes the stage NOW (against the views registered
-          // so far) and registers a lineage-free LogicalRDD view
-          val t0 = System.nanoTime()
-          val df = spark.sql(sql).localCheckpoint()
-          Scratch.logBuild(view, (System.nanoTime() - t0) / 1e9)
-          df.createOrReplaceTempView(view)
-          df
-        }
-      state.put(spark, Entry(dir, dfs))
-    }
-  }
-
-  /** The stage list is three INDEPENDENT dependency chains — the wm
-    * selection chain (bkt → knn → indeg → carriers → stego), the IVF
-    * index build (ct → asg), and the PQ index build (ct → codes);
-    * none references another chain's views (each starts from the raw
-    * `embeddings` scan). A cold build is overhead-dominated (codegen
-    * compile + parquet commit per stage — §4), so the three chains
-    * build CONCURRENTLY (Spark job submission is thread-safe; temp
-    * views register through the session catalog), cutting the one-off
-    * cold cost to the longest chain instead of the stage-count sum.
-    * Within a chain, order is preserved — each stage reads the views
-    * its own thread registered before it. */
-  private def inChains[T](stages: Seq[(String, String)])(
-      build: ((String, String)) => T): Seq[T] = {
-    val wmStages = Set("g_bkt", "g_knn", "g_indeg", "g_carriers", "g_stego")
-    val chains = Seq(
-      stages.filter(s => wmStages(s._1)),
-      stages.filter(_._1.startsWith("g_ivf_")),
-      stages.filter(_._1.startsWith("g_pq_")),
-      // anything new / unclassified builds sequentially after its
-      // predecessors in declaration order, on the first chain's thread
-      stages.filterNot(s => wmStages(s._1) ||
-        s._1.startsWith("g_ivf_") || s._1.startsWith("g_pq_"))
-    ).filter(_.nonEmpty)
-    val out = new java.util.concurrent.ConcurrentHashMap[String, T]()
+  /** Build-or-read every chain stage for (spark, dir) and register the
+    * g_* views. The stage SQL uses the same N-derived plane count as
+    * SparkEntry's consumer renderings: the views and every query
+    * reading them must agree on the bucket layout.
+    *
+    * A cold build is overhead-dominated (codegen compile + parquet
+    * commit per stage), so the chains build CONCURRENTLY, one thread
+    * each (Spark job submission is thread-safe; temp views register
+    * through the session catalog), cutting the one-off cold cost to the
+    * longest chain instead of the stage-count sum. Within a chain each
+    * stage reads the views its own thread registered before it. */
+  def ensure(spark: SparkSession, dir: String): Unit = {
+    Tables.register(spark, dir)
+    val cs = chainsByPlanes.computeIfAbsent(Wm.lshPlanesFor(Tables.vectorCount(spark, dir)),
+      p => chains(new Gen(SparkDialect, lshPlanes = p).cacheStages))
+    def build(stage: (String, String)): Unit = Scratch.table(spark, dir, stage._1, stage._2)
+    val cold = cs.filterNot(_.forall(s => Scratch.isBuilt(spark, dir, s._1)))
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val threads = chains.map { chain =>
+    val threads = cold.map { chain =>
       val t = new Thread(() =>
-        try chain.foreach(s => out.put(s._1, build(s)))
+        try chain.foreach(build)
         catch { case e: Throwable => err.compareAndSet(null, e) })
       t.start(); t
     }
@@ -167,71 +69,7 @@ object WmCache {
       case e: Exception => e
       case e => new RuntimeException(e)
     }
-    stages.flatMap(s => Option(out.get(s._1)))
-  }
-
-  /** Build-or-reuse the parquet scratch for (dir, chain SQL), then
-    * register every stage as a parquet-backed temp view. */
-  private def ensureScratch(spark: SparkSession, dir: String, root: File,
-                            stages: Seq[(String, String)]): Unit = {
-    val base = new File(root, cacheKey(dir, stages))
-    if (!new File(base, "_DONE").exists()) {
-      val tmp = new File(root,
-        s"${base.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      tmp.mkdirs()
-      // size the write to the data: every stage is O(N)-to-O(N·d) rows,
-      // so ~1 output file per 200k vectors (capped at the session's
-      // parallelism) — a 5k-vector corpus writes 1 file per stage
-      // instead of 32 near-empty tasks + commit rounds, a 100 TB corpus
-      // still fans out. repartition (not coalesce): coalesce would
-      // narrow the whole upstream computation to `parts` tasks; the
-      // extra exchange is tiny exactly when parts is small
-      val parts = math.max(1L, math.min(
-        spark.sessionState.conf.numShufflePartitions.toLong,
-        Tables.vectorCount(spark, dir) / 200000L)).toInt
-      inChains(stages) { case (view, sql) =>
-        val p = new File(tmp, view).getAbsolutePath
-        val t0 = System.nanoTime()
-        spark.sql(sql).repartition(parts).write.mode("overwrite").parquet(p)
-        Scratch.logBuild(view, (System.nanoTime() - t0) / 1e9)
-        // downstream stages read the materialized rows, not the plan
-        spark.read.parquet(p).createOrReplaceTempView(view)
-      }
-      new File(tmp, "_DONE").createNewFile()
-      if (!tmp.renameTo(base)) {
-        // lost a race: a COMPLETE winner serves everyone — drop ours
-        if (new File(base, "_DONE").exists()) deleteRec(tmp)
-        else {
-          // base exists but incomplete (a dead builder's partial):
-          // rename it ASIDE first, then delete the renamed dir — a
-          // delete-in-place would yank parquet files out from under a
-          // concurrent reader in another process that already resolved
-          // `base` (this path has no read-time fallback); then retry,
-          // so the scratch actually lands and future sessions read
-          val stale = new File(root,
-            s"${base.getName}.stale-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-          if (base.renameTo(stale)) deleteRec(stale)
-          if (!tmp.renameTo(base)) {
-            // a live concurrent builder got in between — serve our tmp
-            // this session and say the path leaked instead of hiding it
-            System.err.println(s"[wmcache] rename race: serving and leaking $tmp")
-            stages.foreach { case (view, _) =>
-              spark.read.parquet(new File(tmp, view).getAbsolutePath)
-                .createOrReplaceTempView(view) }
-            return
-          }
-        }
-      }
-    }
-    stages.foreach { case (view, _) =>
-      spark.read.parquet(new File(base, view).getAbsolutePath)
-        .createOrReplaceTempView(view)
-    }
-  }
-
-  private def deleteRec(f: File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(): Unit
+    // memo hits: (re-)register every view for this dir
+    cs.flatten.foreach(build)
   }
 }

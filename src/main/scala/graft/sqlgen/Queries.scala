@@ -14429,16 +14429,21 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * substituted as exact double literals (shortest-repr round-trips
     * bit-exactly through cast-as-double in both engines): the same
     * per-row left-to-right dot + round(…, 5) as the generated SQL's
-    * final select, minus the cross join against the 1-row chain. */
+    * final select, minus the cross join against the 1-row chain.
+    * Spark's round() goes through BigDecimal and drops the sign of a
+    * negative value that rounds to zero, which DuckDB keeps (-0.0), so
+    * a negative projection keeps its sign explicitly. */
   def pcaProjectSql(w1: Seq[Double], w2: Seq[Double], m1: Double, m2: Double): String = {
     val idx = 1 to 8
     def proj(w: Seq[Double], m: Double) =
-      s"round(${idx.map(i => s"${d.arrIdx0("nv.v", s"${i - 1}")} * cast(${w(i - 1)} as double)").mkString(" + ")} - cast($m as double), 5)"
-    s"""with $nvCtes
-       |select ${bigint("nv.id")} as vec_id, ${bigint("nv.label")} as label,
-       |  ${proj(w1, m1)} as pc1,
-       |  ${proj(w2, m2)} as pc2
-       |from nv""".stripMargin
+      s"${idx.map(i => s"${d.arrIdx0("nv.v", s"${i - 1}")} * cast(${w(i - 1)} as double)").mkString(" + ")} - cast($m as double)"
+    def signedRound(p: String) = s"if($p < 0, -abs(round($p, 5)), round($p, 5))"
+    s"""with $nvCtes,
+       |pj as (select nv.id, nv.label, ${proj(w1, m1)} as p1, ${proj(w2, m2)} as p2 from nv)
+       |select ${bigint("id")} as vec_id, ${bigint("label")} as label,
+       |  ${signedRound("p1")} as pc1,
+       |  ${signedRound("p2")} as pc2
+       |from pj""".stripMargin
   }
 
 

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * writes each checkpointed build (pair tables, signatures, vocab, …)
   * as parquet under a (data, SQL)-fingerprinted key; a fresh session
   * READS it (no rebuild) and serves identical rows; any change to the
-  * build SQL lands under a NEW key (auto-invalidation). */
+  * build SQL, or to an upstream artifact it reads, lands under a NEW
+  * key (auto-invalidation). */
 class DocScratchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -21,7 +22,7 @@ class DocScratchSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r1.nonEmpty)
     val done = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("doc-") &&
+      .filter(f => f.isDirectory && f.getName.startsWith("g_sc_probe-") &&
         new java.io.File(f, "_DONE").exists())
     assert(done.length == 1, s"expected one completed doc scratch key, got ${done.length}")
     val stamp = new java.io.File(done(0), "g_sc_probe").lastModified()
@@ -47,7 +48,7 @@ class DocScratchSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r3 == r1.filter(_._1 % 14 == 0))
     val done2 = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("doc-") &&
+      .filter(f => f.isDirectory && f.getName.startsWith("g_sc_probe-") &&
         new java.io.File(f, "_DONE").exists())
     assert(done2.length == 2, "SQL change must create a new scratch key")
 
@@ -58,6 +59,34 @@ class DocScratchSpec extends AnyFunSuite {
     val r4 = Scratch.table(s4, TestSpark.Sf, "g_sc_probe", sql)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r4 == r1)
+
+    // lineage: an artifact that reads another is keyed by its
+    // upstream's key, so editing the upstream in a fresh session must
+    // rebuild the reader under a new key, never serve its old rows
+    val downSql = "select doc_id from g_up"
+    def lineage(upSql: String): (Seq[Long], Seq[Long]) = {
+      val s = spark.newSession()
+      s.conf.set("spark.graft.scratch", root)
+      Tables.register(s, TestSpark.Sf)
+      val up = Scratch.table(s, TestSpark.Sf, "g_up", upSql)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      val down = Scratch.table(s, TestSpark.Sf, "g_down", downSql)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      (up, down)
+    }
+    def downKeys: Set[String] = new java.io.File(root).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("g_down-") &&
+        new java.io.File(f, "_DONE").exists()).map(_.getName).toSet
+    val upSql = "select doc_id from documents where doc_id % 2 = 0"
+    val (up1, down1) = lineage(upSql)
+    assert(up1.nonEmpty && down1 == up1)
+    val keys1 = downKeys
+    val (up2, down2) = lineage(upSql + " and doc_id % 3 = 0")
+    assert(up2 == up1.filter(_ % 3 == 0) && up2.length < up1.length)
+    assert(down2 == up2, "g_down served rows built from g_up before its edit")
+    val keys2 = downKeys
+    assert(keys1.size == 1 && keys2.size == 2 && keys1.subsetOf(keys2),
+      "an upstream edit must land the reader under a new key")
   }
 
   test("a production table (g_jpairs) round-trips through the scratch across sessions") {
@@ -70,7 +99,7 @@ class DocScratchSpec extends AnyFunSuite {
     }
     val a = runIn(root)
     val files = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("doc-"))
+      .filter(f => f.isDirectory && f.getName.startsWith("g_jpairs-"))
     assert(files.length == 1)
     val stamp = new java.io.File(files(0), "g_jpairs").lastModified()
     val b = runIn(root) // fresh session, same scratch → read, not rebuild
